@@ -33,12 +33,9 @@ def _ensure_shipped(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_qcfe_shipped", False):
         return
-    try:
-        from query_cost_feature_engineering_spark.session import package_zip
+    from query_cost_feature_engineering_spark.session import package_zip
 
-        sc.addPyFile(package_zip())
-    except Exception:
-        pass  # already added, or PYTHONPATH already covers the workers
+    sc.addPyFile(package_zip())
     sc._qcfe_shipped = True
 
 

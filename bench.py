@@ -243,35 +243,18 @@ def main() -> None:
     # steal (BENCH.md); min-of-reps is the capability estimate used
     # everywhere in BENCH.md
     n_reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    from query_cost_feature_engineering_spark.operators import (
-        asof,
-        neardup,
-        prefix,
-        rank,
+    # Every driver-side statistics cache (approxQuantile probes, vocab
+    # probe, skew detection, ...) is emptied between reps so min-of-reps
+    # measures the real query, not a cache hit.
+    from query_cost_feature_engineering_spark.runtime.statcache import (
+        clear_all,
     )
-
-    def _clear_stat_caches() -> None:
-        # Every driver-side statistics cache is cleared between reps so
-        # min-of-reps measures the real query (approxQuantile probes,
-        # vocab probe, skew detection included), not a cache hit —
-        # uniform methodology across ALL cached operators (round-3
-        # ADVICE: vocab alone was cleared, under-reporting the prefix/
-        # rank/asof queries relative to the stated method).
-        neardup._VOCAB_CACHE.clear()
-        neardup._SRP_MATRIX_CACHE.clear()
-        prefix._PREFIX_STATS_CACHE.clear()
-        rank._RANK_STATS_CACHE.clear()
-        asof._SKEW_PROFILE_CACHE.clear()
-        import query_cost_feature_engineering_spark.queries as _q
-
-        if _q._BLOOM_CACHE is not None:
-            _q._BLOOM_CACHE.clear()
 
     detail: dict[str, dict] = {}
     for name in HEADLINE:
         per_rep = []
         for _ in range(n_reps):
-            _clear_stat_caches()
+            clear_all()
             t0 = time.perf_counter()
             _run_count(qs[name](spark, sf_dir))
             per_rep.append(time.perf_counter() - t0)

@@ -70,13 +70,6 @@ def encode_png(arr: np.ndarray) -> bytes:
     return PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
 
 
-def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    p = a.astype(np.int16) + b.astype(np.int16) - c.astype(np.int16)
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    out = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-    return out.astype(np.uint8)
-
-
 # channels per PNG color type (0 grey, 2 RGB, 3 palette, 4 grey+alpha,
 # 6 RGBA) — the decoder accepts all five, per the spec's valid set
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}

@@ -140,20 +140,6 @@ def _huff_encode_table(bits: list[int], vals: list[int]) -> dict[int, tuple[int,
     return out
 
 
-def _huff_decode_table(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """(length, code) -> symbol (kept as the readable reference form;
-    the decoder uses the LUT below)."""
-    out: dict[tuple[int, int], int] = {}
-    code, k = 0, 0
-    for ln in range(1, 17):
-        for _ in range(bits[ln - 1]):
-            out[(ln, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return out
-
-
 @_lru_cache(maxsize=64)
 def _decode_lut(bits_b: bytes, vals_b: bytes) -> tuple:
     """16-bit-peek lookup tables: index by the next 16 bits of the
@@ -316,19 +302,6 @@ def _ycbcr_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
     b = y + 1.772 * cb
     return np.clip(np.round(np.stack([r, g, b], axis=-1)), 0, 255).astype(
         np.uint8
-    )
-
-
-def _blockify(comp: np.ndarray) -> np.ndarray:
-    """(h, w) -> (n_blocks, 8, 8), edge-padded to multiples of 8."""
-    h, w = comp.shape
-    ph, pw = (-h) % 8, (-w) % 8
-    comp = np.pad(comp, ((0, ph), (0, pw)), mode="edge")
-    hb, wb = comp.shape[0] // 8, comp.shape[1] // 8
-    return (
-        comp.reshape(hb, 8, wb, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8),
-        hb,
-        wb,
     )
 
 

@@ -22,7 +22,6 @@ surface it).
 from __future__ import annotations
 
 import hashlib
-from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -43,30 +42,6 @@ def srp_signs(table: int, bit: int, dim: int = ANN_DIM) -> list[int]:
         else -1
         for d in range(dim)
     ]
-
-
-def _dot_signs(vec, signs: list[int]):
-    """Σ vec[i]·s[i] as a fixed left-to-right fold (bitwise-reproducible)."""
-    arr = F.array(*[F.lit(float(s)) for s in signs])
-    return F.aggregate(
-        F.zip_with(vec, arr, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def bucket_key(vec, table: int, bits: int = ANN_BITS, dim: int = ANN_DIM):
-    """B-bit integer bucket id for one LSH table."""
-    terms = [
-        F.when(
-            F.round(_dot_signs(vec, srp_signs(table, b, dim)), PROJ_DECIMALS)
-            >= 0,
-            F.lit(1 << b),
-        )
-        .otherwise(F.lit(0))
-        for b in range(bits)
-    ]
-    return reduce(lambda a, c: a + c, terms).cast("int")
 
 
 def with_bucket_keys(

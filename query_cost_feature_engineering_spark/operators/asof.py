@@ -13,14 +13,19 @@ Spark has no built-in as-of join (SURVEY.md §2.B), so two strategies:
 2. ``asof_join_pandas_merge`` — the 100-TB path from BASELINE.json
    ``north_rule``: cogroup both sides on a hash bucket of the entity key
    and run a sorted ``pandas.merge_asof`` per bucket (Arrow batches, no
-   per-row Python). Entities flagged *hot* (row count above a threshold)
-   are additionally range-sliced on time using global quantile cut points
-   (``approxQuantile``), with the **last right row of each slice
-   carried forward** across slice boundaries (ffill over the tiny
-   entity×slice lattice) so no probe misses a match that lives in an
-   earlier slice. This is the explicit salting/skew handling the north
-   rule demands: a hot entity's probes parallelize across slices while
-   cold entities stay on the cheap single-shuffle path.
+   per-row Python). Entities flagged *hot* (row count above the caller's
+   ``hot_threshold``, or by default above ``max(10 000, 2·rows /
+   num_buckets)``) are found by ONE job, per-entity counts whose total is
+   observed on that same job, and are additionally range-sliced on time
+   using global quantile cut points (``approxQuantile``), with the
+   **last right row of each slice carried forward** across slice
+   boundaries (ffill over the tiny entity×slice lattice) so no probe
+   misses a match that lives in an earlier slice. This is the explicit
+   salting/skew handling the north rule demands: a hot entity's probes
+   parallelize across slices while cold entities stay on the cheap
+   single-shuffle path. The skew profile (hot ids and cut points) is
+   cached per input snapshot and parameters, the default threshold
+   included (``runtime/statcache``).
 
 Tie contract (matches the golden oracle and pandas.merge_asof): backward
 join with exact-match allowed; among right rows sharing (entity, ts) the
@@ -34,33 +39,53 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from query_cost_feature_engineering_spark.runtime.metrics import observe_counts
 from query_cost_feature_engineering_spark.runtime.statcache import (
+    StatsCache,
     plan_fingerprint,
 )
 
 _SLICES = 32  # time slices for hot entities
+# the auto hot threshold is max(_HOT_FLOOR, 2 * rows / num_buckets)
+_HOT_FLOOR = 10_000
 # beyond this many hot ids, membership tests use a broadcast join
 # instead of `isin` literals (plan size stays O(1) in hot-key count)
 _HOT_LITERAL_CAP = 1000
 
+# (input fingerprint, keys, hot_threshold (None = auto), num_buckets,
+# slices) -> (sorted hot ids, slice cuts); see asof_join_pandas_merge
+_SKEW_PROFILE_CACHE = StatsCache(maxsize=64)
 
-def _filter_hot_membership(spark, df, key, hot_ids, key_type):
-    """Keep rows whose ``key`` is in ``hot_ids`` — literals under
-    ``_HOT_LITERAL_CAP``, broadcast left-semi join above it."""
-    hot_sorted = sorted(hot_ids)
+
+def _with_hot_flag(df, key, hot_sorted, key_type):
+    """Add boolean ``_hot``: is ``key`` one of ``hot_sorted``? Few hot
+    keys (the usual definition of skew) are embedded as ``isin`` literals,
+    the cheapest plan. A heavy-tailed key space can push 10^4+ entities
+    over threshold, and a literal list that size bloats the plan string
+    linearly, so above ``_HOT_LITERAL_CAP`` membership is a broadcast
+    join against a tiny hot-key frame: plan size stays O(1)."""
     if len(hot_sorted) <= _HOT_LITERAL_CAP:
-        return df.filter(F.col(key).isin(hot_sorted))
-    hot_df = spark.createDataFrame(
-        [(k,) for k in hot_sorted],
-        T.StructType([T.StructField("_hot_key", key_type)]),
+        return df.withColumn("_hot", F.col(key).isin(hot_sorted))
+    hot_df = df.sparkSession.createDataFrame(
+        [(k, True) for k in hot_sorted],
+        T.StructType(
+            [
+                T.StructField("_hot_key", key_type),
+                T.StructField("_hot", T.BooleanType()),
+            ]
+        ),
     )
-    return df.join(
-        F.broadcast(hot_df), F.col(key) == F.col("_hot_key"), "left_semi"
+    return (
+        df.join(F.broadcast(hot_df), F.col(key) == F.col("_hot_key"), "left")
+        .withColumn("_hot", F.col("_hot").isNotNull())
+        .drop("_hot_key")
     )
 
-# (plan semanticHash, keys, params) -> (hot_ids, cuts); see the
-# skew-profile cache note in asof_join_pandas_merge. Bounded FIFO.
-_SKEW_PROFILE_CACHE: dict = {}
+
+def _ts_double(df: DataFrame, col: str) -> F.Column:
+    t = df.schema[col].dataType.typeName()
+    c = F.col(col)
+    return c.cast("timestamp").cast("double") if t.startswith("timestamp") else c.cast("double")
 
 
 def asof_join_union_window(
@@ -150,132 +175,62 @@ def asof_join_pandas_merge(
     # Detection runs on a key-only projection: Catalyst column-prunes the
     # upstream plan, so expensive feature UDFs (image decode) are NOT
     # evaluated for these statistics passes — only the final merge pays.
-    # ONE scan of the right keys feeds everything: the per-entity counts
-    # (persisted — #entities rows, orders of magnitude smaller than the
-    # table) answer both the auto-threshold total and the hot-id filter,
-    # and the slice cut points come from the hot entities' per-(entity,
-    # slice-grain) timestamps rather than a second full key scan.
-    # Callers on a measured path can pass ``hot_threshold`` to skip the
-    # auto-threshold aggregate entirely.
-    from pyspark import StorageLevel
-
-    def _ts_double(df: DataFrame, col: str) -> F.Column:
-        t = df.schema[col].dataType.typeName()
-        c = F.col(col)
-        return c.cast("timestamp").cast("double") if t.startswith("timestamp") else c.cast("double")
-
-    rkeys = right.select(rby, ron)
+    # The threshold needs ONE job: per-entity counts, with their total
+    # observed on the same job (runtime/metrics), of which only the
+    # candidates above hot_threshold (or, for the auto threshold, above
+    # its _HOT_FLOOR) cross to the driver. The auto threshold
+    # max(_HOT_FLOOR, 2·total/num_buckets) is never below that floor, so
+    # filtering the candidates on the driver gives the hot set exactly.
+    # Slice cut points come from the hot entities' timestamps only: they
+    # are what the slicing balances, and cold keys would dilute the cuts.
+    #
     # Skew-profile cache: the detection statistics are a pure function of
     # the right-side INPUT + parameters, so re-running the same join
     # (bench reps, a pipeline invoked repeatedly over an unchanged
-    # snapshot) reuses the profile instead of paying the detection job
+    # snapshot) reuses the profile instead of paying the detection jobs
     # again — the statistics-cache pattern. Keyed by the content-aware
     # plan fingerprint (semanticHash + input-file listing hash, see
     # runtime/statcache.py) so rewriting data at the same path misses.
-    # Only the caller-tuned path caches (the auto path's threshold
-    # depends on a total that should re-read).
-    cache_key = None
-    if hot_threshold is not None:
-        fp = plan_fingerprint(right)
-        if fp is not None:
-            cache_key = (fp, by, on, hot_threshold, num_buckets, slices)
-    cached = (
-        _SKEW_PROFILE_CACHE.get(cache_key) if cache_key is not None else None
-    )
-    if cached is not None:
-        hot_ids, cuts = cached
-    else:
-        if hot_threshold is not None:
-            # caller-tuned threshold (the measured/production path):
-            # detection is ONE job — per-key counts filtered to hot ids,
-            # straight to the driver; nothing persisted, no total
-            # aggregate.
-            hot_pd = (
-                rkeys.groupBy(rby)
-                .agg(F.count(F.lit(1)).alias("_cnt"))
-                .filter(F.col("_cnt") > hot_threshold)
-                .select(rby)
-                .toPandas()
-            )
-            hot_ids = set(hot_pd[rby].tolist())
-        else:
-            counts = (
-                rkeys.groupBy(rby)
-                .agg(F.count(F.lit(1)).alias("_cnt"))
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            try:
-                total = int(
-                    counts.agg(F.sum("_cnt").alias("t")).collect()[0]["t"]
-                    or 0
-                )
-                hot_threshold = max(
-                    10_000, total // max(num_buckets, 1) * 2
-                )
-                # only hot ids cross to the driver (tiny by construction)
-                hot_pd = (
-                    counts.filter(F.col("_cnt") > hot_threshold)
-                    .select(rby)
-                    .toPandas()
-                )
-                hot_ids = set(hot_pd[rby].tolist())
-            finally:
-                counts.unpersist()
-
-        # Hot-id membership strategy decided BEFORE the cuts pass so the
-        # quantile scan uses it too (see _filter_hot below).
-        # Time cut points for hot-entity slicing: quantiles over the HOT
-        # entities' timestamps only (they are what the slicing balances;
-        # cold keys would just dilute the cuts and cost a full re-scan).
-        if hot_ids:
-            q = [i / slices for i in range(1, slices)]
-            hkeys = _filter_hot_membership(
-                spark, rkeys, rby, hot_ids, right.schema[rby].dataType
-            )
-            cuts = hkeys.withColumn(
-                "_tsd", _ts_double(hkeys, ron)
-            ).approxQuantile("_tsd", q, 0.001)
-        else:
-            cuts = []
-        if cache_key is not None:
-            if len(_SKEW_PROFILE_CACHE) >= 64:
-                _SKEW_PROFILE_CACHE.pop(next(iter(_SKEW_PROFILE_CACHE)))
-            _SKEW_PROFILE_CACHE[cache_key] = (hot_ids, cuts)
-
-    # Hot-id membership: few hot keys (the usual definition of skew) are
-    # embedded as `isin` literals — the cheapest plan. A heavy-tailed key
-    # space can push 10^4+ entities over threshold, and a literal list
-    # that size bloats the plan string linearly; above _HOT_LITERAL_CAP
-    # membership switches to a broadcast join against a tiny hot-key
-    # frame, keeping plan size O(1) in the hot-key count.
+    rkeys = right.select(rby, ron)
     key_type = right.schema[rby].dataType
-    hot_sorted = sorted(hot_ids) if hot_ids else []
-    use_literals = len(hot_sorted) <= _HOT_LITERAL_CAP
+    fp = plan_fingerprint(right)
+    cache_key = (
+        (fp, by, on, hot_threshold, num_buckets, slices)
+        if fp is not None
+        else None
+    )
 
-    def _hot_frame():
-        return spark.createDataFrame(
-            [(k,) for k in hot_sorted],
-            T.StructType([T.StructField("_hot_key", key_type)]),
+    def detect() -> tuple[list, list]:
+        floor = _HOT_FLOOR if hot_threshold is None else hot_threshold
+        counts, obs = observe_counts(
+            rkeys.groupBy(rby).agg(F.count(F.lit(1)).alias("_cnt")),
+            total=F.sum("_cnt"),
         )
+        cand = counts.filter(F.col("_cnt") > floor).toPandas()
+        total = obs.get["total"] or 0
+        threshold = (
+            max(_HOT_FLOOR, total // max(num_buckets, 1) * 2)
+            if hot_threshold is None
+            else hot_threshold
+        )
+        hot_sorted = sorted(cand.loc[cand["_cnt"] > threshold, rby].tolist())
+        cuts = []
+        if hot_sorted:
+            hkeys = _with_hot_flag(rkeys, rby, hot_sorted, key_type)
+            hkeys = hkeys.filter(F.col("_hot")).withColumn(
+                "_tsd", _ts_double(hkeys, ron)
+            )
+            q = [i / slices for i in range(1, slices)]
+            cuts = hkeys.approxQuantile("_tsd", q, 0.001)
+        return hot_sorted, cuts
+
+    hot_sorted, cuts = _SKEW_PROFILE_CACHE.get_or_compute(cache_key, detect)
 
     def with_bucket(df: DataFrame, key: str, tscol: str) -> DataFrame:
         base = F.pmod(F.xxhash64(F.col(key)), F.lit(num_buckets))
-        if not hot_ids:
+        if not hot_sorted:
             return df.withColumn("_bkt", base.cast("int"))
-        if use_literals:
-            df = df.withColumn("_hot", F.col(key).isin(hot_sorted))
-        else:
-            df = (
-                df.join(
-                    F.broadcast(
-                        _hot_frame().withColumn("_hot_flag", F.lit(True))
-                    ),
-                    F.col(key) == F.col("_hot_key"),
-                    "left",
-                )
-                .withColumn("_hot", F.col("_hot_flag").isNotNull())
-                .drop("_hot_key", "_hot_flag")
-            )
+        df = _with_hot_flag(df, key, hot_sorted, key_type)
         tsd = _ts_double(df, tscol)
         slice_id = F.lit(0)
         for i, c in enumerate(cuts):
@@ -293,9 +248,11 @@ def asof_join_pandas_merge(
     # Carry-forward: last right row of each hot (entity, slice), replicated
     # into every later slice (keeping its true ts) so no probe in a later
     # slice misses a match that lives in an earlier one.
-    if hot_ids:
+    if hot_sorted:
         last_per_slice = (
-            _filter_hot_membership(spark, rb, rby, hot_ids, key_type)
+            _with_hot_flag(rb, rby, hot_sorted, key_type)
+            .filter(F.col("_hot"))
+            .drop("_hot")
             .withColumn(
                 "_rn",
                 F.row_number().over(

@@ -31,7 +31,6 @@ from query_cost_feature_engineering_spark.operators.rank import (
     adaptive_buckets,
 )
 from query_cost_feature_engineering_spark.runtime.statcache import (
-    _MISS,
     StatsCache,
     plan_fingerprint,
 )
@@ -67,11 +66,8 @@ def with_running_sums(
         if fp is not None
         else None
     )
-    cached = _PREFIX_STATS_CACHE.get(ckey)
-    if cached is not _MISS:
-        cuts, totals = cached
-        b = df.withColumn("_rs_bkt", _bucket_expr(bucket_col, cuts))
-    else:
+
+    def stats():
         qs = [i / n_buckets for i in range(1, n_buckets)]
         cuts = sorted(set(df.stat.approxQuantile(bucket_col, qs, rel_err)))
         b = df.withColumn("_rs_bkt", _bucket_expr(bucket_col, cuts))
@@ -84,7 +80,10 @@ def with_running_sums(
             )
             .collect()
         }
-        _PREFIX_STATS_CACHE.put(ckey, (cuts, totals))
+        return cuts, totals
+
+    cuts, totals = _PREFIX_STATS_CACHE.get_or_compute(ckey, stats)
+    b = df.withColumn("_rs_bkt", _bucket_expr(bucket_col, cuts))
     rows, acc = [], [0] * (len(value_cols) + 1)
     for k in sorted(totals):
         rows.append((k, *acc))

@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from query_cost_feature_engineering_spark.runtime.statcache import (
-    _MISS,
     StatsCache,
     plan_fingerprint,
 )
@@ -133,11 +132,8 @@ def with_global_rank(
     ckey = (
         (fp, value_col, n_buckets, rel_err) if fp is not None else None
     )
-    cached = _RANK_STATS_CACHE.get(ckey)
-    if cached is not _MISS:
-        cuts, counts = cached
-        b = df.withColumn("_gr_bkt", _bucket_expr(value_col, cuts))
-    else:
+
+    def stats():
         qs = [i / n_buckets for i in range(1, n_buckets)]
         cuts = sorted(set(df.stat.approxQuantile(value_col, qs, rel_err)))
         b = df.withColumn("_gr_bkt", _bucket_expr(value_col, cuts))
@@ -147,7 +143,10 @@ def with_global_rank(
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-        _RANK_STATS_CACHE.put(ckey, (cuts, counts))
+        return cuts, counts
+
+    cuts, counts = _RANK_STATS_CACHE.get_or_compute(ckey, stats)
+    b = df.withColumn("_gr_bkt", _bucket_expr(value_col, cuts))
     total, offsets = 0, {}
     for k in sorted(counts):
         offsets[k] = total

@@ -39,6 +39,10 @@ from query_cost_feature_engineering_spark.operators.windows import (
     with_rolling_time_aggs,
     with_session_ids,
 )
+from query_cost_feature_engineering_spark.runtime.statcache import (
+    StatsCache,
+    plan_fingerprint,
+)
 
 R = 4  # shared rounding for float aggregates
 
@@ -415,9 +419,9 @@ def asof_purchases_window(spark, sf_dir):
 
 def asof_purchases_pandas(spark, sf_dir):
     """Cogrouped merge_asof path. ``hot_threshold`` is caller-tuned (the
-    production pattern: profile the key distribution once per snapshot),
-    which makes skew detection a single one-job pass; detection itself
-    still runs, so a genuinely hot key would still get time-sliced."""
+    production pattern: profile the key distribution once per snapshot);
+    detection itself still runs, so a genuinely hot key would still get
+    time-sliced."""
     spine, right = _asof_frames(spark, sf_dir)
     out = asof_join_pandas_merge(
         spine, right, on="ts", by="user_id",
@@ -2979,7 +2983,7 @@ def c4_clean_docs(spark, sf_dir):
 BLOOM_M_BITS = 1 << 22  # 4.2M bits = 65,536 longs = 512 KiB broadcast
 BLOOM_K = 5
 BLOOM_DUP_FRAC_MAX = 0.3
-_BLOOM_CACHE = None  # lazy StatsCache: bitset keyed by input fingerprint
+_BLOOM_CACHE = StatsCache()  # bitset keyed by input fingerprint
 
 def _bit_masks():
     """Literal 2^b masks (b = 0..63; 63 wraps to the sign bit) so the
@@ -3069,15 +3073,6 @@ def bloom_dedup_docs(spark, sf_dir):
     Oracle: exact membership LEFT JOIN in DuckDB over the identical
     line synthesis (matches iff zero Bloom false positives — see the
     sizing note at BLOOM_M_BITS)."""
-    global _BLOOM_CACHE
-    from query_cost_feature_engineering_spark.runtime.statcache import (
-        _MISS,
-        StatsCache,
-        plan_fingerprint,
-    )
-
-    if _BLOOM_CACHE is None:
-        _BLOOM_CACHE = StatsCache()
     lines = _bloom_lines(spark, sf_dir)
     ref = (
         lines.filter((F.col("doc_id") % 3 == 0) & F.col("line").isNotNull())
@@ -3086,8 +3081,8 @@ def bloom_dedup_docs(spark, sf_dir):
     )
     fp = plan_fingerprint(ref)
     key = (fp, BLOOM_M_BITS, BLOOM_K) if fp is not None else None
-    bits = _BLOOM_CACHE.get(key)
-    if bits is _MISS:
+
+    def bitset_words():
         words = (
             ref.select(
                 F.explode(
@@ -3107,7 +3102,9 @@ def bloom_dedup_docs(spark, sf_dir):
         bits = [0] * (BLOOM_M_BITS // 64)
         for r in words:
             bits[r["wi"]] = r["w"]
-        _BLOOM_CACHE.put(key, bits)
+        return bits
+
+    bits = _BLOOM_CACHE.get_or_compute(key, bitset_words)
     bitset = spark.createDataFrame([(bits,)], "bits: array<bigint>")
     probe = lines.filter(F.col("doc_id") % 3 != 0).crossJoin(
         F.broadcast(bitset)

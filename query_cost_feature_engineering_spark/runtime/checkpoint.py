@@ -13,7 +13,9 @@ replacement:
   under ``<out>/_manifest/part=<k>.json`` carrying lineage (input paths +
   fingerprint of the input file listing, i.e. the "snapshot id" of a
   parquet dir; with a real Iceberg catalog this is the snapshot-id) and
-  metrics (row count, bytes, wall seconds).
+  metrics (row count, bytes, wall seconds). Row counts are observed on
+  the write job itself (``runtime/metrics``), so no job reads the output
+  back.
 - On restart, partitions whose manifest exists *with the same input
   fingerprint* are skipped entirely — Spark never reads their input rows
   again (partition pruning on the bucket predicate); a changed fingerprint
@@ -36,6 +38,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from query_cost_feature_engineering_spark.runtime.metrics import observe_counts
 
 MANIFEST_DIR = "_manifest"
 
@@ -124,7 +128,11 @@ def write_resumable(
         todo = todo[:fail_after]
 
     t0 = time.perf_counter()
-    pending = bucketed.filter(F.col("part_id").isin(todo))
+    # per-partition row counts ride the write job as observed metrics
+    pending, obs = observe_counts(
+        bucketed.filter(F.col("part_id").isin(todo)),
+        **{f"p{p}": F.count_if(F.col("part_id") == p) for p in todo},
+    )
     (
         pending.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -132,17 +140,7 @@ def write_resumable(
         .parquet(out_dir)
     )
     wall = time.perf_counter() - t0
-
-    # per-partition metrics from the files just written (parquet footer
-    # counts — no second pass over input data)
-    counts = {
-        r["part_id"]: r["cnt"]
-        for r in spark.read.parquet(out_dir)
-        .filter(F.col("part_id").isin(todo))
-        .groupBy("part_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
+    counts = obs.get
     for p in todo:
         pdir = Path(out_dir) / f"part_id={p}"
         nbytes = sum(f.stat().st_size for f in pdir.glob("*.parquet")) if pdir.is_dir() else 0
@@ -150,7 +148,7 @@ def write_resumable(
             out_dir,
             {
                 "partition": p,
-                "rows": int(counts.get(p, 0)),
+                "rows": int(counts[f"p{p}"]),
                 "bytes": nbytes,
                 "input_fingerprint": fp,
                 "input_paths": sorted(input_paths or []),

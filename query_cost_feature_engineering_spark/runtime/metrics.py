@@ -7,10 +7,12 @@ produces the data, so counts/sums/null-rates arrive with the action —
 no second scan, which at 100 TB is the difference between free
 accounting and doubling the IO bill.
 
-Use for pipeline health numbers (rows in/out, decode failures, null
-fractions) alongside ``runtime/checkpoint.py``'s per-partition
-manifests (which cover durable per-partition lineage; this covers
-cheap whole-job counters)."""
+Two engine paths read their statistics this way: the as-of skew
+detection observes the total row count on its per-entity count job
+(``operators/asof.py``), and ``runtime/checkpoint.write_resumable``
+observes each partition's row count on the write job itself, so its
+manifests need no read-back pass. Pipeline health numbers (rows in/out,
+decode failures, null fractions) attach the same way."""
 
 from __future__ import annotations
 
@@ -19,9 +21,11 @@ from pyspark.sql import functions as F
 
 
 def observe_counts(
-    df: DataFrame, name: str = "job_metrics", **exprs: Column
+    df: DataFrame, name: str | None = None, **exprs: Column
 ) -> tuple[DataFrame, Observation]:
     """Attach row count + caller aggregates to the next action on ``df``.
+    Without ``name`` the observation gets a unique generated one: a plan
+    may carry several observations, and two with one name fail analysis.
 
     Returns (df, observation); read ``observation.get`` AFTER an action
     has run. Example::

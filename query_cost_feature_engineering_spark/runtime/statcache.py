@@ -14,6 +14,11 @@ fingerprint of the input file listing (path, size, mtime — the same
 change-detector ``runtime/checkpoint.input_fingerprint`` uses for
 resume), so a data rewrite misses the cache. With an Iceberg catalog
 the listing would be replaced by the table's snapshot-id.
+
+Every cache is a ``StatsCache``, and each one registers itself on
+creation, so ``clear_all()`` empties all of them at once (a benchmark
+that must time the statistics jobs, not cache hits, calls it between
+reps) and each cache counts its own hits and misses.
 """
 
 from __future__ import annotations
@@ -22,7 +27,7 @@ import hashlib
 import os
 from urllib.parse import unquote, urlparse
 
-_MISS = object()
+_REGISTRY: list[StatsCache] = []  # every cache ever built, for clear_all()
 
 
 def plan_fingerprint(df) -> tuple | None:
@@ -49,24 +54,35 @@ def plan_fingerprint(df) -> tuple | None:
 
 
 class StatsCache:
-    """Tiny bounded-FIFO cache. Values may be None (a valid result), so
-    misses are signalled by the module sentinel ``_MISS``."""
+    """Tiny bounded-FIFO cache, registered for ``clear_all()``."""
 
     def __init__(self, maxsize: int = 16):
         self._data: dict = {}
         self._max = maxsize
+        self.hits = 0
+        self.misses = 0
+        _REGISTRY.append(self)
 
-    def get(self, key):
-        if key is None:
-            return _MISS
-        return self._data.get(key, _MISS)
-
-    def put(self, key, value) -> None:
-        if key is None:
-            return
-        if len(self._data) >= self._max:
-            self._data.pop(next(iter(self._data)))
-        self._data[key] = value
+    def get_or_compute(self, key, compute):
+        """The value cached under ``key``, else ``compute()``, cached under
+        ``key``. Values may be None (a valid result); a None key (an input
+        ``plan_fingerprint`` cannot key) computes every time."""
+        if key is not None and key in self._data:
+            self.hits += 1
+            return self._data[key]
+        self.misses += 1
+        value = compute()
+        if key is not None:
+            if len(self._data) >= self._max:
+                self._data.pop(next(iter(self._data)))
+            self._data[key] = value
+        return value
 
     def clear(self) -> None:
         self._data.clear()
+
+
+def clear_all() -> None:
+    """Empty every ``StatsCache``; hit and miss counts keep running."""
+    for cache in _REGISTRY:
+        cache.clear()

@@ -68,8 +68,7 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try:
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass  # already added in a reused session
+    # re-adding the same zip to a reused session is a no-op, so any error
+    # here is a real setup failure
+    spark.sparkContext.addPyFile(package_zip())
     return spark

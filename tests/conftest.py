@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from query_cost_feature_engineering_spark.session import get_spark
@@ -29,3 +31,22 @@ def spine_pdf(images_pdf):
 @pytest.fixture(scope="session")
 def images_sdf(spark, images_pdf):
     return spark.createDataFrame(images_pdf).cache()
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)``: how many Spark jobs ``fn()`` ran, read from the
+    status tracker under a job group of its own."""
+    sc = spark.sparkContext
+
+    def run(fn) -> int:
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land async
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -138,3 +138,83 @@ def test_duplicate_ts_tie_takes_last_by_tiebreak(spark):
         )
         assert got["image_id"].tolist() == ["b", "c"], fn.__name__
         assert got["px"].tolist() == [2.0, 3.0], fn.__name__
+
+
+def test_auto_threshold_slices_hot_entity(spark, monkeypatch):
+    """No ``hot_threshold``: an entity above the 10,000-row floor of the
+    auto threshold is detected and time-sliced (rows land in buckets at or
+    above ``num_buckets``), and the result still equals merge_asof."""
+    from query_cost_feature_engineering_spark.runtime.statcache import clear_all
+
+    rng = np.random.default_rng(7)
+    n_hot, n_buckets = 12_000, 8
+    right_pdf = pd.DataFrame(  # one row per (entity, ts): no ties to break
+        {
+            "entity_id": [0] * n_hot + [e for e in range(1, 10) for _ in range(40)],
+            "ts": np.concatenate(
+                [np.arange(n_hot), np.tile(np.arange(40) * 300, 9)]
+            ).astype(float),
+        }
+    )
+    right_pdf["val"] = np.arange(len(right_pdf))
+    left_pdf = pd.DataFrame(
+        {
+            "entity_id": rng.integers(0, 11, 600),
+            "ts": rng.uniform(-50, n_hot + 50, 600),
+        }
+    )
+    left_pdf["probe_id"] = np.arange(len(left_pdf))
+
+    cogrouped = []
+    df_cls = type(spark.range(1))
+    group_by = df_cls.groupBy
+
+    def spy(self, *cols):
+        if cols == ("_bkt",):
+            cogrouped.append(self)
+        return group_by(self, *cols)
+
+    monkeypatch.setattr(df_cls, "groupBy", spy)
+    clear_all()
+    got = asof_join_pandas_merge(
+        spark.createDataFrame(left_pdf),
+        spark.createDataFrame(right_pdf),
+        value_cols=["val"],
+        num_buckets=n_buckets,
+        slices=6,
+    ).toPandas()
+    monkeypatch.undo()
+
+    lb, rb = cogrouped
+    for side in (lb, rb):
+        assert side.filter(side["_bkt"] >= n_buckets).count() > 0
+    want = pd.merge_asof(
+        left_pdf.sort_values("ts", kind="mergesort"),
+        right_pdf.sort_values(["ts", "val"], kind="mergesort"),
+        on="ts", by="entity_id", direction="backward",
+    ).sort_values("probe_id").reset_index(drop=True)
+    got = got.sort_values("probe_id").reset_index(drop=True)
+    assert len(got) == len(want)
+    assert np.allclose(
+        got["val"].to_numpy(float), want["val"].to_numpy(float), equal_nan=True
+    )
+
+
+def test_detection_without_hot_keys_runs_one_count_job(spark, frames, count_jobs):
+    """Skew detection that finds no hot entity costs exactly the jobs of
+    one per-entity ``groupBy(...).toPandas()`` (2 under AQE); nothing is
+    persisted and no separate total is collected."""
+    from query_cost_feature_engineering_spark.runtime.statcache import clear_all
+
+    spine_sdf, right_sdf, _ = frames
+    clear_all()
+    detect = count_jobs(
+        lambda: asof_join_pandas_merge(
+            spine_sdf, right_sdf, value_cols=VALUE_COLS, tiebreak="image_id",
+            num_buckets=8,
+        )
+    )
+    one_count = count_jobs(
+        lambda: right_sdf.groupBy("entity_id").count().toPandas()
+    )
+    assert detect == one_count

@@ -68,14 +68,27 @@ def test_manifest_lineage_and_metrics(spark, events_df, tmp_path):
     df, src = events_df
     out = str(tmp_path / "out")
     res = write_resumable(df, out, "user_id", N_BUCKETS, [src])
+    read_back = {
+        r["part_id"]: r["count"]
+        for r in spark.read.parquet(out).groupBy("part_id").count().collect()
+    }
     total_rows = 0
     for p in range(N_BUCKETS):
         rec = json.loads((Path(out) / "_manifest" / f"part={p}.json").read_text())
         assert rec["input_fingerprint"] == res["fingerprint"]
         assert rec["input_paths"] == [src]
         assert rec["rows"] > 0 and rec["bytes"] > 0
+        assert rec["rows"] == read_back[p]
         total_rows += rec["rows"]
     assert total_rows == df.count()
+
+
+def test_write_runs_only_its_write_job(spark, events_df, tmp_path, count_jobs):
+    """Manifest row counts are observed on the write job: a shuffle-free
+    input costs exactly one Spark job, with no read-back of the output."""
+    df, src = events_df
+    out = str(tmp_path / "out")
+    assert count_jobs(lambda: write_resumable(df, out, "user_id", N_BUCKETS, [src])) == 1
 
 
 def test_changed_input_invalidates(spark, events_df, tmp_path):

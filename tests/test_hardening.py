@@ -23,6 +23,8 @@ from query_cost_feature_engineering_spark.runtime.checkpoint import (
 )
 from query_cost_feature_engineering_spark.runtime.delete import delete_keys
 from query_cost_feature_engineering_spark.runtime.statcache import (
+    _REGISTRY,
+    clear_all,
     plan_fingerprint,
 )
 
@@ -188,6 +190,46 @@ def test_plan_fingerprint_detects_same_path_rewrite(spark, tmp_path):
     spark.range(20).write.mode("overwrite").parquet(p)
     fp2 = plan_fingerprint(spark.read.parquet(p))
     assert fp2 is not None and fp2 != fp1
+
+
+def test_clear_all_empties_every_registered_cache(spark, tmp_path):
+    from query_cost_feature_engineering_spark import queries
+    from query_cost_feature_engineering_spark.operators import (
+        asof,
+        neardup,
+        prefix,
+        rank,
+    )
+
+    caches = [
+        asof._SKEW_PROFILE_CACHE,
+        neardup._VOCAB_CACHE,
+        neardup._SRP_MATRIX_CACHE,
+        prefix._PREFIX_STATS_CACHE,
+        rank._RANK_STATS_CACHE,
+        queries._BLOOM_CACHE,
+    ]
+    assert all(any(c is r for r in _REGISTRY) for c in caches)
+
+    p = str(tmp_path / "right")
+    pd_right = pd.DataFrame({"entity_id": [1, 1, 2], "ts": [1.0, 2.0, 3.0]})
+    spark.createDataFrame(pd_right.assign(val=[10, 20, 30])).write.parquet(p)
+    left = spark.createDataFrame(pd_right[["entity_id", "ts"]])
+
+    def join():
+        asof_join_pandas_merge(
+            left, spark.read.parquet(p), value_cols=["val"], num_buckets=2
+        )
+
+    join()
+    assert asof._SKEW_PROFILE_CACHE._data
+    clear_all()
+    assert all(not c._data for c in _REGISTRY)
+    hits, misses = asof._SKEW_PROFILE_CACHE.hits, asof._SKEW_PROFILE_CACHE.misses
+    join()
+    join()
+    assert asof._SKEW_PROFILE_CACHE.misses == misses + 1
+    assert asof._SKEW_PROFILE_CACHE.hits == hits + 1
 
 
 def test_pii_scrub_redaction_semantics(spark):
