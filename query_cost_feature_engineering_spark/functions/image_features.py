@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from query_cost_feature_engineering_spark.codecs import decode_image, to_gray
+from query_cost_feature_engineering_spark.sqltext import ident, with_sql_columns
 
 STAT_COLS = [
     "px_min_r", "px_min_g", "px_min_b",
@@ -98,8 +99,9 @@ def with_image_features(
     undecodable rows instead of failing the job."""
     udf = _decode_stats_udf if on_error == "fail" else _decode_stats_tolerant_udf
     df = df.withColumn("_px", udf(F.col(bytes_col), F.col("fmt")))
-    # single withColumns pass — chained withColumn is O(n²) in the analyzer
-    out = df.withColumns({c: F.col(f"_px.{c}") for c in DECODE_COLS}).drop("_px")
+    # star-expand the struct: a Column per field costs py4j round trips
+    # (see sqltext)
+    out = df.select("*", "_px.*").drop("_px")
     if on_error != "fail":
         out = out.withColumn("decode_ok", F.col("px_mean").isNotNull())
     return out
@@ -114,14 +116,15 @@ def with_basics(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
 
 
 def with_phash_bits(df: DataFrame, phash_col: str = "phash") -> DataFrame:
-    """Unpack the 64-bit perceptual hash into bit columns JVM-side."""
-    return df.withColumns(
+    """Unpack the 64-bit perceptual hash into bit columns JVM-side, as
+    one SQL-text projection (64 columns; see ``sqltext``)."""
+    ph = ident(phash_col)
+    return with_sql_columns(
+        df,
         {
-            f"ph_{i}": F.shiftright(F.col(phash_col), 63 - i)
-            .bitwiseAND(F.lit(1))
-            .cast("double")
+            f"ph_{i}": f"CAST(shiftright({ph}, {63 - i}) & 1 AS DOUBLE)"
             for i in range(64)
-        }
+        },
     )
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from query_cost_feature_engineering_spark.sources.images import VOCAB
+from query_cost_feature_engineering_spark.sqltext import ident, literal, with_sql_columns
 
 _TOKEN_SPLIT = r"\s+"
 
@@ -142,14 +143,18 @@ def train_bpe_merges(word_freqs, n_merges: int):
 
 
 def with_caption_features(df: DataFrame, col: str = "caption") -> DataFrame:
-    """token_count + one count column per vocabulary word (64)."""
-    toks = F.split(F.col(col), _TOKEN_SPLIT)
-    cols = {"token_count": F.size(toks).cast("double")}
+    """token_count + one count column per vocabulary word (64).
+
+    Tokens are the non-empty runs between Java ``\\s`` characters
+    (``[ \\t\\n\\x0b\\f\\r]``), so leading, trailing or repeated
+    whitespace adds no token and ``''`` has none (``golden.py`` splits
+    the same way). The 65 columns are one SQL-text projection: as
+    ``Column`` calls they would cost ~3,000 py4j round trips (``sqltext``)."""
+    toks = f"split({ident(col)}, {literal(_TOKEN_SPLIT)})"
+    cols = {"token_count": f"CAST(size(filter({toks}, t -> t != '')) AS DOUBLE)"}
     for w in VOCAB:
-        cols[f"tok_{w}"] = F.size(
-            F.filter(toks, lambda t: t == F.lit(w))
-        ).cast("double")
-    return df.withColumns(cols)
+        cols[f"tok_{w}"] = f"CAST(size(filter({toks}, t -> t = {literal(w)})) AS DOUBLE)"
+    return with_sql_columns(df, cols)
 
 
 # Tiny public stopword lists per language for the n-gram/stopword language

@@ -8,6 +8,8 @@ entity × timestamp). Mirrors the role of the reference's vectorizers
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 
@@ -17,6 +19,15 @@ from query_cost_feature_engineering_spark.functions.image_features import (
 )
 from query_cost_feature_engineering_spark.operators.windows import SESSION_GAP_S
 from query_cost_feature_engineering_spark.sources.images import VOCAB
+
+# Java's ``\s`` (the engine splits captions with a Java regex): ASCII only,
+# so U+00A0 and other Unicode spaces are not separators, unlike str.split()
+_JAVA_SPACE = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def caption_tokens(caption: str) -> list[str]:
+    """Non-empty runs between Java ``\\s`` characters."""
+    return [t for t in _JAVA_SPACE.split(caption) if t]
 
 
 def golden_features(images: pd.DataFrame) -> pd.DataFrame:
@@ -29,7 +40,7 @@ def golden_features(images: pd.DataFrame) -> pd.DataFrame:
     df = pd.concat([df.reset_index(drop=True), px], axis=1)
     df = pd.concat([df, phash_bits_pandas(df["phash"])], axis=1)
 
-    toks = df["caption"].str.split()
+    toks = df["caption"].map(caption_tokens)
     df["token_count"] = toks.map(len).astype(float)
     for w in VOCAB:
         df[f"tok_{w}"] = toks.map(lambda t, w=w: float(sum(x == w for x in t)))
@@ -90,7 +101,7 @@ def ensure_stream_features_fixture(
             "ts": imgs["ts"],
             "fmt": imgs["fmt"].astype(str),
             "token_count": imgs["caption"]
-            .str.split()
+            .map(caption_tokens)
             .map(len)
             .astype("int64"),
             "px_mean": px["px_mean"].to_numpy(dtype=np.float64),

@@ -266,11 +266,10 @@ def asof_join_pandas_merge(
             .drop("_rn")
         )
         # propagate each slice's closer into every later slice (slices is
-        # small and hot entities are few, so this stays tiny)
-        slice_ids = list(range(num_buckets, num_buckets + slices))
-        lattice = spark.createDataFrame(
-            [(s,) for s in slice_ids],
-            T.StructType([T.StructField("_tgt", T.IntegerType())]),
+        # small and hot entities are few, so this stays tiny); the slice
+        # ids come from a JVM range, not a Python-fed RDD scan
+        lattice = spark.range(num_buckets, num_buckets + slices).select(
+            F.col("id").cast("int").alias("_tgt")
         )
         carries = (
             last_per_slice.crossJoin(F.broadcast(lattice))

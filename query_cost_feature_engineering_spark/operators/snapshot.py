@@ -15,8 +15,10 @@ the zero-temporal-leakage discipline (SURVEY.md §5).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from query_cost_feature_engineering_spark.sqltext import ident, with_sql_columns
 
 
 def fit_linear_by_group(
@@ -145,23 +147,22 @@ def with_expanding_linear_fit(
     only history ≤ t, so the zero-temporal-leakage property test holds.
     Rows before ``min_n`` samples (or with degenerate x-variance) fall back
     to slope=0, intercept=running mean(y) — the reference's fallback."""
-    order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
+    order = ", ".join(ident(c) for c in [ts_col] + ([tiebreak] if tiebreak else []))
     w = (
-        Window.partitionBy(entity_col)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
+        f"OVER (PARTITION BY {ident(entity_col)} ORDER BY {order} "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
-    x, y = F.col(x_col).cast("double"), F.col(y_col).cast("double")
-    n = F.count(F.lit(1)).over(w).cast("double")
-    sx, sy = F.sum(x).over(w), F.sum(y).over(w)
-    sxx, sxy = F.sum(x * x).over(w), F.sum(x * y).over(w)
-    denom = n * sxx - sx * sx
-    ok = (n >= min_n) & (denom > eps)
-    slope = F.when(ok, (n * sxy - sx * sy) / denom).otherwise(F.lit(0.0))
-    intercept = F.when(ok, (sy - slope * sx) / n).otherwise(sy / n)
-    return df.withColumn(f"{prefix}_slope", slope).withColumn(
-        f"{prefix}_intercept", intercept
-    )
+    # SQL text, not Column calls: fewer py4j round trips (see sqltext)
+    x, y = f"CAST({ident(x_col)} AS DOUBLE)", f"CAST({ident(y_col)} AS DOUBLE)"
+    n = f"CAST(count(1) {w} AS DOUBLE)"
+    sx, sy = f"sum({x}) {w}", f"sum({y}) {w}"
+    sxx, sxy = f"sum(({x} * {x})) {w}", f"sum(({x} * {y})) {w}"
+    denom = f"(({n} * {sxx}) - ({sx} * {sx}))"
+    ok = f"(({n} >= {int(min_n)}) AND ({denom} > {float(eps)!r}D))"
+    slope = f"CASE WHEN {ok} THEN ((({n} * {sxy}) - ({sx} * {sy})) / {denom}) ELSE 0.0D END"
+    intercept = f"CASE WHEN {ok} THEN (({sy} - ({slope} * {sx})) / {n}) ELSE ({sy} / {n}) END"
+    df = with_sql_columns(df, {f"{prefix}_slope": slope})
+    return with_sql_columns(df, {f"{prefix}_intercept": intercept})
 
 
 def expanding_linear_fit_pandas(

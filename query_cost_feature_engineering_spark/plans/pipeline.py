@@ -5,7 +5,9 @@ EP1/EP2: parse → featurize → group → normalize → vectorize), re-expresse
 as one declarative Spark plan:
 
     scan (parquet/Iceberg; `bytes` column pruned until the decode UDF)
-    → JVM-side basics/fmt/phash-bit/caption features
+    → JVM-side basics/fmt/phash-bit/caption features (the wide
+      projections are Spark SQL text that the JVM parses in one call,
+      not one py4j round trip per Column call; see ``sqltext``)
     → ONE Arrow-batched pandas UDF (decode + pixel stats)
     → drop `bytes` before any shuffle (never shuffle image payloads)
     → Window layer: lag/lead, ffill backfill, rolling mean, sessionize
@@ -40,6 +42,7 @@ from query_cost_feature_engineering_spark.operators.windows import (
     with_session_ids,
 )
 from query_cost_feature_engineering_spark.sources.images import VOCAB
+from query_cost_feature_engineering_spark.sqltext import ident
 
 WINDOW_COLS = [
     "lag1_px_mean", "lag2_px_mean", "lead1_px_mean", "lead2_px_mean",
@@ -84,16 +87,11 @@ def compute_features(images: DataFrame) -> DataFrame:
 
 
 def assemble_vector(df: DataFrame, out_col: str = "features") -> DataFrame:
-    """Pack FEATURE_ORDER into one array<double>; nulls (warm-up lags) → 0."""
-    return df.withColumn(
-        out_col,
-        F.array(
-            *[
-                F.coalesce(F.col(c).cast("double"), F.lit(0.0))
-                for c in FEATURE_ORDER
-            ]
-        ),
-    )
+    """Pack FEATURE_ORDER into one array<double>; nulls (warm-up lags) → 0,
+    NaN stays NaN. The array is one SQL expression: as ``Column`` calls
+    its 160 slots would cost ~6,000 py4j round trips (``sqltext``)."""
+    slots = ", ".join(f"coalesce(CAST({ident(c)} AS DOUBLE), 0.0D)" for c in FEATURE_ORDER)
+    return df.withColumn(out_col, F.expr(f"array({slots})"))
 
 
 __all__ = [

@@ -2751,6 +2751,9 @@ C4_BOILER = [
 
 
 HTML_MIN_MAIN_CHARS = 40  # extraction gate: pages with less main text drop
+# whitespace runs, spelled out: Java's \s includes \x0b and RE2's (the
+# DuckDB oracle's engine) does not, so both sides use this explicit class
+HTML_SPACE_RUN = r"[ \t\n\r\f\x0b]+"
 
 
 def html_extract_docs(spark, sf_dir):
@@ -2803,8 +2806,8 @@ def html_extract_docs(spark, sf_dir):
         "<[^>]*>",
     ):
         main = F.regexp_replace(main, pat, " ")
-    main = F.trim(F.regexp_replace(main, "\\s+", " "))
-    norm = F.trim(F.regexp_replace(F.col("text"), "\\s+", " "))
+    main = F.trim(F.regexp_replace(main, HTML_SPACE_RUN, " "))
+    norm = F.trim(F.regexp_replace(F.col("text"), HTML_SPACE_RUN, " "))
     d = d.select(
         "doc_id",
         F.length("html").cast("long").alias("html_len"),

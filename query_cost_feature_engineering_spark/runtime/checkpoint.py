@@ -128,10 +128,12 @@ def write_resumable(
         todo = todo[:fail_after]
 
     t0 = time.perf_counter()
-    # per-partition row counts ride the write job as observed metrics
+    # per-partition row counts ride the write job as one observed array
+    # in ``todo`` order (SQL text: see sqltext)
+    per_part = ", ".join(f"count_if(part_id = {p})" for p in todo)
     pending, obs = observe_counts(
         bucketed.filter(F.col("part_id").isin(todo)),
-        **{f"p{p}": F.count_if(F.col("part_id") == p) for p in todo},
+        rows_per_part=F.expr(f"array({per_part})"),
     )
     (
         pending.write.mode("overwrite")
@@ -140,7 +142,7 @@ def write_resumable(
         .parquet(out_dir)
     )
     wall = time.perf_counter() - t0
-    counts = obs.get
+    counts = dict(zip(todo, obs.get["rows_per_part"]))
     for p in todo:
         pdir = Path(out_dir) / f"part_id={p}"
         nbytes = sum(f.stat().st_size for f in pdir.glob("*.parquet")) if pdir.is_dir() else 0
@@ -148,7 +150,7 @@ def write_resumable(
             out_dir,
             {
                 "partition": p,
-                "rows": int(counts[f"p{p}"]),
+                "rows": int(counts[p]),
                 "bytes": nbytes,
                 "input_fingerprint": fp,
                 "input_paths": sorted(input_paths or []),

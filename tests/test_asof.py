@@ -218,3 +218,26 @@ def test_detection_without_hot_keys_runs_one_count_job(spark, frames, count_jobs
         lambda: right_sdf.groupBy("entity_id").count().toPandas()
     )
     assert detect == one_count
+
+
+def test_hot_path_plan_has_no_python_fed_scan(spark):
+    """The carry-forward lattice of the hot path is a JVM range: with
+    JVM-only inputs, the physical plan scans no Python-fed RDD."""
+    from pyspark.sql import functions as F
+
+    right = spark.range(2000).select(
+        (F.col("id") % 3).alias("entity_id"),
+        F.col("id").cast("double").alias("ts"),
+        F.col("id").alias("val"),
+    )
+    left = spark.range(300).select(
+        (F.col("id") % 4).alias("entity_id"),
+        (F.col("id") * 7.0).alias("ts"),
+        F.col("id").alias("probe_id"),
+    )
+    out = asof_join_pandas_merge(
+        left, right, value_cols=["val"], num_buckets=4, hot_threshold=1, slices=5,
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" in plan
+    assert "ExistingRDD" not in plan

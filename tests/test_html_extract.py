@@ -7,6 +7,10 @@ property and the gate/link accounting on the real sf0.001 corpus.
 
 from __future__ import annotations
 
+import duckdb
+import pandas as pd
+
+from query_cost_feature_engineering_spark.oracles import ORACLES
 from query_cost_feature_engineering_spark.queries import (
     HTML_MIN_MAIN_CHARS,
     html_extract_docs,
@@ -35,3 +39,27 @@ def test_plan_is_map_only(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Python" not in plan  # zero UDFs — all JVM expressions
+
+
+def test_engine_and_oracle_agree_on_vertical_tab(spark, tmp_path):
+    """Java's \\s includes \\x0b and RE2's does not: with an explicit
+    whitespace class, Spark and DuckDB extract the same main text."""
+    texts = [
+        "alpha\x0bbeta  scan gamma delta epsilon zeta eta theta iota kappa",
+        "tab\there\nnewline\x0cform\rreturn scan \x0b\x0b end of page text",
+    ]
+    pd.DataFrame(
+        {"doc_id": [0, 1], "text": texts, "source": ["src0", "src1"]}
+    ).to_parquet(tmp_path / "documents.parquet")
+    cols = ["doc_id", "main_len", "text_digest", "roundtrip_ok"]
+    got = html_extract_docs(spark, str(tmp_path)).toPandas()[cols]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'documents.parquet'}')"
+    )
+    want = con.execute(ORACLES["html_extract_docs"]).fetchdf()[cols]
+    got = got.sort_values("doc_id").reset_index(drop=True)
+    want = want.sort_values("doc_id").reset_index(drop=True)
+    assert got["roundtrip_ok"].all()
+    assert got.astype(str).equals(want.astype(str))
